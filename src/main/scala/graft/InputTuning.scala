@@ -157,8 +157,9 @@ object InputTuning {
       // all 60 M lineitem rows (1.37 GiB) into a sort-merge join
       // whose date-filtered orders side keeps ~15%. Widening the
       // gates to 256 MB each keeps every safety the machinery
-      // already has (maxNumItems caps the filter: creation sides
-      // past 4 M distinct keys are skipped automatically, so a
+      // already has (maxNumItems, 4 M by default, caps the filter's
+      // size: a creation side past 4 M distinct keys still gets a
+      // filter, sized for 4 M items, so it only prunes less — a
       // 100 TB corpus can never be asked to build a gigabyte bloom)
       // while letting mid-size creation sides prune big scans.
       // numBits sized for maxNumItems (8 bits/key ≈ 3% fpp — false

@@ -14,6 +14,7 @@ import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
   * re-ingested corpus would keep serving the OLD data (Spark's
   * CacheManager substitutes by canonicalized plan). */
 private[graft] final class PlanKeyedCache {
+  PlanKeyedCache.instances.add(this)
 
   // The second key component is the frame's canonicalized plan for
   // the plain form, or a (canonicalized input plan, tag) pair for the
@@ -91,5 +92,19 @@ private[graft] final class PlanKeyedCache {
         it.remove()
       }
     }
+  }
+}
+
+private[graft] object PlanKeyedCache {
+  // every owner is an object-level singleton, so the list stays tiny
+  private val instances =
+    new java.util.concurrent.CopyOnWriteArrayList[PlanKeyedCache]()
+
+  /** Live entry count for `s` across every cache owner — lets specs
+    * pin that session stop releases them all. */
+  def size(s: SparkSession): Int = {
+    var n = 0
+    instances.forEach(c => n += c.size(s))
+    n
   }
 }

@@ -3,15 +3,20 @@ package graft.dq
 import java.time.Instant
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructField
+import org.apache.spark.storage.StorageLevel
 
 /** DQ rules engine (reference `src/dq.py:83-172`): not_null, unique,
   * range, freshness, z-score anomaly, dispatched over a (sampled,
   * cached) DataFrame.
   *
-  * Batched for scale: all single-pass rules (not_null/unique/range/
-  * freshness + the anomaly stats pass) evaluate in ONE aggregation
-  * job; a second job counts outliers for all anomaly rules at once.
-  * The reference runs each rule as its own pandas pass.
+  * Fused with the profile: every rule's aggregates join the
+  * [[Profiler]]'s pass-1 aggregate. not_null and unique read the
+  * profile's `nulls` and `distinct`; range, freshness and the anomaly
+  * statistics ride along as extra columns. A check therefore costs
+  * pass 1, the profile's top-k pass, and — only when an anomaly rule
+  * has a non-zero std — one outlier-count pass for all anomaly rules
+  * at once. The reference runs each rule as its own pandas pass.
   *
   * Freshness takes an injected `now` — never `current_timestamp()` —
   * so results are reproducible (SURVEY.md §2.2 R4).
@@ -30,83 +35,95 @@ final case class UnknownRule(ruleType: String,
     column: String) extends Rule { val name = ruleType }
 
 object DqEngine {
+  import Profiler.qcol
 
   private def pct(x: Long, total: Long): Double =
     if (total == 0) 0.0
     else BigDecimal(100.0 * x / total)
       .setScale(4, BigDecimal.RoundingMode.HALF_UP).toDouble
 
-  /** Backtick-quoted column reference (names may contain dots etc.). */
-  private def qcol(name: String) =
-    col("`" + name.replace("`", "``") + "`")
-
   /** Numeric coercion matching pandas `to_numeric(errors="coerce")`:
     * non-numeric values become null instead of throwing under ANSI. */
   private def numCoerce(name: String) =
     qcol(name).try_cast("double")
 
-  /** Evaluate all rules over `df` in at most two aggregation jobs.
-    * When anomaly rules are present the second job re-scans `df` for
-    * outlier counts; on an uncached non-deterministic input the rows
-    * counted in job 2 could differ from the ones job 1 computed stats
-    * over, so the frame is pinned for the two-job window unless the
-    * caller already cached it ([[runChecks]] does). */
+  /** Evaluate all rules over `df`: one pass-1 aggregate, plus the
+    * outlier pass when anomaly rules need it. That second pass
+    * re-scans `df`; on an uncached non-deterministic input the rows it
+    * counts could differ from the ones pass 1 computed stats over, so
+    * the frame is pinned for the two-pass window unless the caller
+    * already cached it. */
   def evaluate(df: DataFrame, rules: Seq[Rule],
                now: Instant = Instant.now()): Seq[RuleResult] = {
     val mustCache =
       rules.exists(_.isInstanceOf[AnomalyRule]) &&
-        df.storageLevel == org.apache.spark.storage.StorageLevel.NONE
+        df.storageLevel == StorageLevel.NONE
     if (mustCache) df.persist()
-    try evaluateImpl(df, rules, now)
+    try check(df, rules, now, profiled = false)._1
     finally if (mustCache) df.unpersist()
   }
 
-  private def evaluateImpl(df: DataFrame, rules: Seq[Rule],
-                           now: Instant): Seq[RuleResult] = {
+  /** Rules (and, when `profiled`, the exact profile of every column)
+    * over `df`, all from one pass-1 aggregate. */
+  private def check(df: DataFrame, rules: Seq[Rule], now: Instant,
+      profiled: Boolean): (Seq[RuleResult], Seq[ColumnProfile]) = {
     val known = rules.filter(!_.isInstanceOf[UnknownRule])
+    val fields = if (profiled) df.schema.fields.toSeq else Nil
 
-    // Job 1: every rule contributes aggregate columns to one wide agg;
-    // the row count rides along instead of a separate df.count() job.
-    val aggs = known.zipWithIndex.flatMap { case (r, i) =>
-      val c = qcol(r.column)
+    // not_null and unique read the profile's nulls/distinct of their
+    // column, resolved the way Spark resolves it (an unknown column
+    // fails analysis here, as a direct reference would).
+    val counted = known.collect {
+      case r @ (_: NotNullRule | _: UniqueRule) => r.column
+    }.distinct
+    val resolved: Map[String, StructField] =
+      if (counted.isEmpty) Map.empty
+      else counted.zip(df.select(counted.map(qcol): _*).schema.fields).toMap
+
+    val extra = known.zipWithIndex.flatMap { case (r, i) =>
       r match {
-        case _: NotNullRule => Seq(
-          sum(c.isNull.cast("long")).as(s"a${i}_nulls"))
-        case _: UniqueRule => Seq(
-          count_distinct(c).as(s"a${i}_distinct"))
         case RangeRule(colName, lo, hi) =>
           val cd = numCoerce(colName)
           Seq(
-            lo.map(v => sum(when(cd < v, 1L).otherwise(0L)).as(s"a${i}_below"))
-              .getOrElse(lit(0L).as(s"a${i}_below")),
-            hi.map(v => sum(when(cd > v, 1L).otherwise(0L)).as(s"a${i}_above"))
-              .getOrElse(lit(0L).as(s"a${i}_above")))
-        case _: FreshnessRule => Seq(
+            s"a${i}_below" ->
+              lo.map(v => sum(when(cd < v, 1L).otherwise(0L))).getOrElse(lit(0L)),
+            s"a${i}_above" ->
+              hi.map(v => sum(when(cd > v, 1L).otherwise(0L))).getOrElse(lit(0L)))
+        case FreshnessRule(colName, _) => Seq(
           // try_to_timestamp = pandas to_datetime(errors="coerce"):
           // unparseable → null (ANSI to_timestamp would throw).
-          max(try_to_timestamp(c)).cast("long").as(s"a${i}_maxts"))
+          s"a${i}_maxts" -> max(try_to_timestamp(qcol(colName))).cast("long"))
         case AnomalyRule(colName, _) =>
           // coerce like the reference (`pd.to_numeric(errors='coerce')`,
           // src/dq.py:137): strings/decimals profile as doubles, and a
           // non-numeric column auto-passes instead of an ANSI cast error
           val cd = numCoerce(colName)
           Seq(
-            avg(cd).as(s"a${i}_mean"),
-            stddev_pop(cd).as(s"a${i}_std"),
-            count(cd).as(s"a${i}_n"))
-        case _: UnknownRule => Nil
+            s"a${i}_mean" -> avg(cd),
+            s"a${i}_std" -> stddev_pop(cd),
+            s"a${i}_n" -> count(cd))
+        case _ => Nil
       }
     }
+
+    // Pass 1, skipped only when nothing at all is asked of it.
     val row =
-      if (known.isEmpty) null
-      else df.agg(count(lit(1)).as("a_total"), aggs: _*).collect()(0)
+      if (!profiled && known.isEmpty) null
+      else Profiler.aggregate(df,
+        fields.flatMap(Profiler.columnAggs(_)) ++
+          resolved.values.flatMap(Profiler.nullsAndDistinct(_, exact = true)) ++
+          extra)
     val total =
-      if (row == null) 0L else row.getAs[Long]("a_total")
+      if (row == null) 0L else row.getAs[Long]("n")
     def get[T](n: String): Option[T] =
       if (row != null && !row.isNullAt(row.fieldIndex(n)))
         Some(row.getAs[T](n)) else None
 
-    // Job 2: outlier counts for all anomaly rules with usable stats.
+    val profile =
+      if (profiled) Profiler.read(fields, row, Profiler.topValues(df, fields, Profiler.TopK))
+      else Nil
+
+    // Outlier counts for all anomaly rules with usable stats.
     val anomalyIdx = known.zipWithIndex.collect {
       case (a: AnomalyRule, i)
           if get[Double](s"a${i}_std").exists(_ > 0.0) => (a, i)
@@ -124,18 +141,20 @@ object DqEngine {
         anomalyIdx.map { case (_, i) => i -> r.getAs[Long](s"o$i") }.toMap
       }
 
-    rules.map { rule =>
+    val results = rules.map { rule =>
       val i = known.indexOf(rule)
       rule match {
         case NotNullRule(colName) =>
-          val nulls = get[Long](s"a${i}_nulls").getOrElse(0L)
+          val nulls =
+            get[Long](s"nulls__${resolved(colName).name}").getOrElse(0L)
           RuleResult("not_null", colName, nulls == 0, Map(
             "nulls" -> nulls.toString, "total" -> total.toString,
             "null_rate_pct" -> pct(nulls, total).toString))
         case UniqueRule(colName) =>
           // Reference formula (`src/dq.py:104-106`): dupes = total −
           // nunique(non-null); every null row counts as a duplicate.
-          val distinct = get[Long](s"a${i}_distinct").getOrElse(0L)
+          val distinct =
+            get[Long](s"distinct__${resolved(colName).name}").getOrElse(0L)
           val dupes = total - distinct
           RuleResult("unique", colName, dupes == 0, Map(
             "duplicates" -> dupes.toString, "total" -> total.toString))
@@ -177,9 +196,10 @@ object DqEngine {
             Map("error" -> s"unknown rule type: $t"))
       }
     }
+    (results, profile)
   }
 
-  /** Sample → profile → rules → report (reference `src/dq.py:153-172`,
+  /** Sample → profile + rules → report (reference `src/dq.py:153-172`,
     * §3.3 lifecycle). `limit` clamps to [1, 200000] like the reference
     * (`src/dq.py:19-21`, `src/config.py:195-196`).
     */
@@ -188,24 +208,25 @@ object DqEngine {
                 now: Instant = Instant.now()): DqReport = {
     graft.metrics.Metrics.inc("dq_requests_total", Map("route" -> "check"))
     val clamped = math.max(1, math.min(limit, 200000))
-    // A caller that already clamped AND persisted its sample (the
-    // facade's dqCheck does, so rule evaluation and the returned
-    // sample_rows come from ONE materialization) must not get a
-    // second limit+cache layered on top — that is a distinct plan,
-    // so the same rows would occupy block-manager storage twice for
-    // the duration of the request.
-    val preCached = where.isEmpty &&
-      df.storageLevel != org.apache.spark.storage.StorageLevel.NONE
+    // One cached sample per request, read by every pass. A caller that
+    // already cached a sample provably within the limit (the facade's
+    // dqCheck caches its `where` + `limit`, so rule evaluation and the
+    // returned sample_rows come from ONE materialization) is used as
+    // it is: a `limit` on top would be a distinct, uncached plan, so
+    // each pass would re-run its single-partition exchange. Anything
+    // else is filtered, clamped and cached here for the request.
+    val bounded = where.isEmpty &&
+      df.storageLevel != StorageLevel.NONE &&
+      df.queryExecution.logical.maxRows.exists(_ <= clamped)
     val sample =
-      if (preCached) df.limit(clamped)
+      if (bounded) df
       else where.foldLeft(df)((d, p) => d.where(p)).limit(clamped).cache()
     try {
-      val prof = Profiler.profile(sample)
-      val results = evaluate(sample, rules, now)
+      val (results, prof) = check(sample, rules, now, profiled = true)
       results.foreach(r => graft.metrics.Metrics.inc(
         "dq_checks_total", Map("passed" -> r.passed.toString)))
       DqReport(prof, results, Report.render(prof, results))
-    } finally if (!preCached) sample.unpersist()
+    } finally if (!bounded) sample.unpersist()
   }
 }
 

@@ -114,13 +114,15 @@ class HttpFacade(
     // When the facade owns this session's lifetime, drop every
     // per-session pipeline cache with it — otherwise the
     // cached/persisted frames (shingle index, pair graph, candidate
-    // intersections, ANN signatures, relation handles) pin the
-    // stopped session's memory until JVM exit.
+    // intersections, ANN signatures, relation handles, decoded media
+    // hash frames) pin the stopped session's memory until JVM exit.
     if (ownsSessionCaches) {
       graft.queries.TextPipeline.invalidate(spark)
       graft.queries.VectorPipeline.invalidate(spark)
       graft.streaming.VectorStreams.invalidate(spark)
       graft.sources.Tables.invalidate(spark)
+      graft.pipeline.Multimodal.invalidate(spark)
+      graft.pipeline.TextPrep.invalidate(spark)
     }
   }
 
@@ -271,7 +273,9 @@ class HttpFacade(
     // returned sample_rows must come from the SAME materialized sample
     // — an uncached limit() over a multi-file table returns whichever
     // partitions answer first, so a second scan could hand back rows
-    // that were never checked.
+    // that were never checked. runChecks reads this cache as its
+    // sample (it is already within the limit), so the request holds
+    // one cached copy.
     val df = sampled(in, "sample_limit").cache()
     try {
       val report = DqEngine.runChecks(df, rules,

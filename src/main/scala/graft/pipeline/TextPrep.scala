@@ -164,6 +164,13 @@ object TextPrep {
       shingleHashes(graft.sources.Tables.table(spark, dir, "documents")).cache()
     })
 
+  /** Live cached-index count for this session (spec observability). */
+  private[graft] def cachedIndexes(spark: org.apache.spark.sql.SparkSession): Int = {
+    var n = 0
+    indexCache.forEach((k, _) => if (k._1 eq spark) n += 1)
+    n
+  }
+
   /** Drop this session's cached indexes (call on session stop or after
     * re-ingesting a corpus; entries would otherwise pin the session
     * and serve stale data). */

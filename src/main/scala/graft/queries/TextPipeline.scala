@@ -260,6 +260,16 @@ object TextPipeline extends graft.Registry {
     * pre-change dump at sf0.01.
     */
   def langId(s: SparkSession, dir: String): DataFrame = {
+    // The label set is the classifier's class list: tiny and bounded,
+    // collected once from a pruned 1-column scan. A null label names
+    // no class (its docs are still classified), and a corpus without
+    // any label has no class to predict: an empty confusion matrix,
+    // not an analysis failure on a pivot with no columns.
+    val langs = docs(s, dir).select("lang").where(col("lang").isNotNull)
+      .distinct().collect().map(_.getString(0)).sorted.toSeq
+    if (langs.isEmpty)
+      return docs(s, dir).where(lit(false)).select(col("lang"),
+        col("lang").as("predicted_lang"), lit(0L).as("n_docs"))
     // cached once (plan-keyed, invalidate-owned): the token explode is
     // the expensive subtree and BOTH the df aggregation and the
     // scoring join consume it — uncached, Catalyst scans and explodes
@@ -269,22 +279,19 @@ object TextPipeline extends graft.Registry {
         col("doc_id"), col("lang"),
         explode(array_distinct(split(col("text"), " "))).as("tok"))
       .select(col("doc_id"), col("lang"), hashKey63(col("tok")).as("g")))
-    // r20 second pass: the label set is tiny and bounded (it is the
-    // classifier's class list), so collect it once from a pruned
-    // 1-column scan and PIVOT the df table to ONE row per token key
-    // carrying all |langs| df counts. The scoring join then emits one
-    // row per (doc, token) instead of one per (doc, token, df_lang) —
-    // the old form multiplied the join output (and the partial-agg
-    // update stream behind it) by |langs| — and the per-doc scores
-    // become |langs| plain codegen'd SUM columns in a single hash
-    // aggregate keyed (doc_id, lang), replacing BOTH old aggregates
-    // (the ×langs sum AND the ObjectHashAggregate collect_list).
+    // r20 second pass: PIVOT the df table over the label set to ONE
+    // row per token key carrying all |langs| df counts. The scoring
+    // join then emits one row per (doc, token) instead of one per
+    // (doc, token, df_lang) — the old form multiplied the join output
+    // (and the partial-agg update stream behind it) by |langs| — and
+    // the per-doc scores become |langs| plain codegen'd SUM columns in
+    // a single hash aggregate keyed (doc_id, lang), replacing BOTH old
+    // aggregates (the ×langs sum AND the ObjectHashAggregate
+    // collect_list).
     // sum(coalesce(df_L, 0)) makes a lang sharing no token with the
     // doc score 0 — it previously had no candidate row at all; a
     // 0-score candidate can never win the argmax because the doc's
     // own lang always scores ≥ its distinct-token count ≥ 1.
-    val langs = docs(s, dir).select("lang").distinct()
-      .collect().map(_.getString(0)).sorted.toSeq
     // positional rename: a pathological label value equal to one of
     // the join columns (doc_id/lang/g) must not collide
     val dfVec = toks
@@ -2126,13 +2133,16 @@ object TextPipeline extends graft.Registry {
             // plus a TakeOrdered of k rows, instead of a second full
             // typed-aggregate pass (per-row Scala map updates) whose
             // vocabulary-sized merged map lands on the driver. The
-            // shuffle stays bounded by the SAME capacity the ladder
-            // already accepted for its driver-side map, so the
-            // web-scale refusal contract is untouched: a vocabulary
-            // past maxCapacity still takes the ceiling rung below and
-            // refuses loudly when uncertifiable. Exactness no longer
-            // rests on the HLL estimate at all (an underestimate cost
-            // the old ladder one more rung; here it cannot matter).
+            // result is exact whatever the estimate says: the groupBy
+            // counts every token. The early return itself, though,
+            // rests on the HLL estimate, and so does the web-scale
+            // refusal contract: only while the true vocabulary lies
+            // within the estimate's 10% margin is the shuffle bounded
+            // by the capacity the ladder accepted. An underestimate
+            // past that margin (a ~5σ event at rsd 0.02) takes this
+            // exact path over a vocabulary above maxCapacity — a
+            // spillable aggregate sized by the true vocabulary —
+            // instead of the ceiling rung below and its loud refusal.
             if (wanted <= maxCapacity)
               return toks.groupBy("token")
                 .agg(count(lit(1)).as("cnt"))

@@ -54,8 +54,9 @@ class InputTuningSpec extends AnyFunSuite {
     // runtime bloom-filter join pruning: gates widened to 256 MB both
     // sides (Spark's defaults — 10 MB creation / 10 GB application —
     // never fire between single-node toys and multi-TB clusters);
-    // filter sizing stays capped by maxNumItems, so no input scale
-    // can be asked to build an unbounded bloom
+    // a large creation side is not skipped: its filter is capped at
+    // maxNumItems, so no input scale can be asked to build an
+    // unbounded bloom
     assert(l("spark.sql.optimizer.runtime.bloomFilter.creationSideThreshold")
       === (256L << 20).toString)
     assert(l(

@@ -81,6 +81,55 @@ class DqEngineSpec extends SparkSpec {
     assert(r.details("error").contains("bogus"))
   }
 
+  private val allRules = Seq(NotNullRule("amount"), UniqueRule("id"),
+    RangeRule("amount", Some(0.0), Some(100.0)), FreshnessRule("ts_str"),
+    AnomalyRule("amount", sigma = 1.0))
+  private val now = Instant.parse("2024-01-05T12:00:00Z")
+
+  test("runChecks: profile and rules in one pass-1 aggregate, at most 3 jobs") {
+    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+    // the facade's shape: a cached sample already within the limit
+    val sample = df.limit(1000).cache()
+    try {
+      sample.count()
+      var rep: DqReport = null
+      val rec = Recorded(spark) {
+        rep = DqEngine.runChecks(sample, allRules, limit = 200000, now = now)
+      }
+      // pass 1, top-k, outliers (the anomaly rule has std > 0)
+      assert(rec.jobs <= 3)
+      // every pass reads the caller's cache; none caches it again
+      val caches = rec.plans.flatMap(_.collect {
+        case s: InMemoryTableScanExec => s.relation.cacheBuilder
+      }).distinct
+      assert(caches.size === 1)
+      assert(rep.profile === Profiler.profile(sample))
+      assert(rep.results === DqEngine.evaluate(sample, allRules, now))
+      assert(rep.results.map(_.passed) === Seq(false, false, false, true, false))
+    } finally sample.unpersist()
+    // a cached frame that is not provably within the limit is sampled
+    // and cached once here; still three passes
+    val table = df.cache()
+    try {
+      table.count()
+      val rec = Recorded(spark)(DqEngine.runChecks(table, allRules, now = now))
+      assert(rec.jobs <= 3)
+    } finally table.unpersist()
+  }
+
+  test("runChecks on an empty frame and an all-null column returns typed results") {
+    val empty = DqEngine.runChecks(df.where("false"), allRules, now = now)
+    assert(empty.profile.forall(p => p.count == 0 && p.distinct == 0))
+    assert(empty.results.map(r => r.rule -> r.passed) === Seq("not_null" -> true,
+      "unique" -> true, "range" -> true, "freshness" -> false, "anomaly" -> true))
+    val nulls = df.select(org.apache.spark.sql.functions.lit(null).cast("double")
+      .as("amount"), df("id"), df("ts_str"))
+    val rep = DqEngine.runChecks(nulls, allRules, now = now)
+    assert(rep.results.head.details("nulls") === "5")
+    assert(rep.profile.find(_.column == "amount").get.distinct === 0)
+    assert(rep.results.find(_.rule == "anomaly").get.details("checked") === "0")
+  }
+
   test("runChecks clamps sample, renders report, aggregates passed") {
     val rep = DqEngine.runChecks(df,
       Seq(NotNullRule("id"), UniqueRule("id")), limit = 1000000)

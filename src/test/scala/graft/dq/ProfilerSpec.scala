@@ -2,6 +2,10 @@ package graft.dq
 
 import graft.SparkSpec
 import java.sql.Timestamp
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.ExpandExec
+import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 
 class ProfilerSpec extends SparkSpec {
   import spark.implicits._
@@ -92,5 +96,78 @@ class ProfilerSpec extends SparkSpec {
         case _ => ()
       }
     }
+  }
+
+  /** `count_distinct` of every column of `df`, by name. */
+  private def countDistinct(df: DataFrame): Map[String, Long] = {
+    val r = df.agg(count_distinct(col(s"`${df.columns.head}`")).as(df.columns.head),
+      df.columns.tail.map(c => count_distinct(col(s"`$c`")).as(c)): _*).collect()(0)
+    df.columns.map(c => c -> r.getAs[Long](c)).toMap
+  }
+
+  test("exact distinct equals count_distinct: NaN, -0.0/0.0, nulls, other types") {
+    import spark.implicits._
+    // count_distinct counts {0.0, NaN, 1.0}; a bare collect_set would
+    // count the three NaNs apart
+    val floats = Seq(Some(0.0), Some(-0.0), Some(Double.NaN), Some(Double.NaN),
+      Some(0.0 / 0.0), Some(1.0), None).toDF("d")
+      .select(col("d"), col("d").cast("float").as("f"),
+        col("d").cast("string").as("s"))
+    val more = Seq(
+      (Some(BigDecimal("1.50")), Some(Timestamp.valueOf("2024-01-01 00:00:00")), Some("a")),
+      (Some(BigDecimal("1.5")), Some(Timestamp.valueOf("2024-01-01 00:00:00")), Some("A")),
+      (Some(BigDecimal("2.25")), Some(Timestamp.valueOf("2024-01-02 00:00:00")), Some("a ")),
+      (None, None, None)).toDF("dec", "ts", "s")
+      .select(col("dec").cast("decimal(18,2)").as("dec"), col("ts"), col("s"))
+    Seq(floats, more).foreach { df =>
+      val want = countDistinct(df)
+      Profiler.profile(df).foreach { p =>
+        assert(p.distinct === want(p.column), s"distinct of ${p.column}")
+      }
+    }
+    val d = Profiler.profile(floats).find(_.column == "d").get
+    assert(d.distinct === 3 && d.nulls === 1)
+    assert(Profiler.profile(floats).find(_.column == "f").get.distinct === 3)
+  }
+
+  test("all-null columns, an empty frame and a single row profile without error") {
+    import spark.implicits._
+    val allNull = Seq((1L, None: Option[Double], None: Option[String]),
+      (2L, None, None)).toDF("id", "x", "s")
+      .withColumn("nothing", lit(null))
+    val ps = Profiler.profile(allNull).map(p => p.column -> p).toMap
+    assert(ps("x").nulls === 2 && ps("x").distinct === 0)
+    assert(ps("x").numeric.exists(n => n.min.isNaN && n.p95.isNaN))
+    assert(ps("s").distinct === 0 && ps("s").stringLength.isEmpty)
+    assert(ps("nothing").count === 2 && ps("nothing").distinct === 0)
+    assert(ps("x").topValues.isEmpty && ps("id").topValues.size === 2)
+
+    val empty = df.where(lit(false))
+    val es = Profiler.profile(empty)
+    assert(es.map(_.column) === df.columns.toSeq)
+    es.foreach { p =>
+      assert(p.count === 0 && p.nulls === 0 && p.distinct === 0 && p.topValues.isEmpty)
+    }
+    assert(es.find(_.column == "x").get.numeric.exists(_.mean.isNaN))
+
+    val one = df.limit(1)
+    val os = Profiler.profile(one).map(p => p.column -> p).toMap
+    assert(os("x").count === 1 && os("x").distinct === 1)
+    assert(os("x").numeric.exists(n => n.stdPop == 0.0 && n.p50 == n.max))
+    assert(os("t").timestamp.isDefined)
+  }
+
+  test("an exact profile runs no Expand: one pass-1 aggregate, one top-k pass") {
+    import spark.implicits._
+    val wide = Seq.tabulate(50)(i => (i.toLong, i * 0.5, s"v${i % 7}",
+      new Timestamp(i * 3600000L))).toDF("a", "b", "c", "d").cache()
+    try {
+      wide.count()
+      val rec = Recorded(spark)(Profiler.profile(wide))
+      assert(rec.plans.size === 2)
+      rec.plans.foreach(p => assert(p.collect { case e: ExpandExec => e }.isEmpty,
+        s"Expand in an exact profile plan:\n$p"))
+      assert(rec.jobs === 2)
+    } finally wide.unpersist()
   }
 }

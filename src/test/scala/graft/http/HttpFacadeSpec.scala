@@ -612,6 +612,54 @@ class HttpFacadeSpec extends SparkSpec {
     } finally spark.catalog.dropTempView("freshly_minted_signups")
   }
 
+  test("DQ routes answer 200 over an empty uploaded table") {
+    val nsId = mapper.readTree(post("/namespace",
+      """{"name": "Empty NS"}""").body()).get("id").asLong()
+    val tid = mapper.readTree(post(s"/namespace/$nsId/table",
+      """{"name": "hollow"}""").body()).get("id").asLong()
+    val up = post(s"/namespace/$nsId/table/$tid/upload",
+      """{"file_name": "hollow.csv", "content": "a,b\n"}""")
+    assert(up.statusCode() === 200)
+    assert(spark.table("empty_ns.hollow").count() === 0)
+    val p = post("/dq/profile", """{"table": "empty_ns.hollow"}""")
+    assert(p.statusCode() === 200, p.body())
+    val prof = mapper.readTree(p.body()).get("profile")
+    assert(prof.get("a").get("count").asLong() === 0)
+    assert(prof.get("a").get("distinct").asLong() === 0)
+    val c = post("/dq/check",
+      """{"table": "empty_ns.hollow", "rules": [
+        |  {"type": "not_null", "column": "a"},
+        |  {"type": "unique", "column": "b"},
+        |  {"type": "anomaly", "column": "a"}
+        |]}""".stripMargin)
+    assert(c.statusCode() === 200, c.body())
+    val n = mapper.readTree(c.body())
+    assert(n.get("passed").asBoolean())
+    assert(n.get("sample_rows").size() === 0)
+    delete(s"/namespace/$nsId")
+  }
+
+  test("stop() releases every session cache owner") {
+    import spark.implicits._
+    val f2 = new HttpFacade(spark)
+    f2.start()
+    // fill the owners the facade used to miss: the shingle index and a
+    // decoded media hash frame, plus a plan-keyed text cache
+    graft.pipeline.TextPrep.shingleIndex(spark, graft.SparkEntry.SmallestSfDir).count()
+    graft.queries.TextPipeline.langId(spark, graft.SparkEntry.SmallestSfDir).count()
+    val im = new java.awt.image.BufferedImage(
+      16, 16, java.awt.image.BufferedImage.TYPE_INT_RGB)
+    val bos = new java.io.ByteArrayOutputStream()
+    javax.imageio.ImageIO.write(im, "png", bos)
+    graft.pipeline.Multimodal.nearDupImages(spark.createDataset(Seq(
+      graft.pipeline.Multimodal.MediaFile(1L, "image", bos.toByteArray, Map.empty)))).collect()
+    assert(graft.pipeline.Multimodal.cachedHashFrames(spark) > 0)
+    assert(graft.pipeline.TextPrep.cachedIndexes(spark) > 0)
+    f2.stop()
+    assert(graft.PlanKeyedCache.size(spark) === 0)
+    assert(graft.pipeline.TextPrep.cachedIndexes(spark) === 0)
+  }
+
   test("DQ routes map a nonexistent table and a bad predicate to 400, not 500") {
     val r = post("/dq/profile", """{"table": "definitely_not_a_table_9q"}""")
     assert(r.statusCode() === 400)

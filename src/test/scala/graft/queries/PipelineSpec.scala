@@ -1125,6 +1125,31 @@ class PipelineSpec extends SparkSpec {
     assert(total === 500L)
   }
 
+  test("language-ID on degenerate corpora: null labels, no labels, no documents") {
+    import spark.implicits._
+    val normal = TextPipeline.langId(spark, dir).schema
+    def corpus(name: String, docs: Seq[(Long, Option[String], String)]): String = {
+      val d = java.nio.file.Files.createTempDirectory(name).toString
+      docs.toDF("doc_id", "lang", "text").write.parquet(s"$d/documents.parquet")
+      d
+    }
+    // a null label names no class; its document is still classified
+    val mixed = corpus("null_lang_docs", Seq(
+      (1L, Some("en"), "the cat sat"), (2L, Some("de"), "der hund lief"),
+      (3L, None, "the cat ran")))
+    val rows = TextPipeline.langId(spark, mixed).collect()
+      .map(r => (Option(r.getString(0)), r.getString(1), r.getLong(2))).toSeq
+    assert(rows === Seq((None, "en", 1L), (Some("de"), "de", 1L), (Some("en"), "en", 1L)))
+    // no label at all, and no document at all: an empty matrix
+    val unlabeled = corpus("no_lang_docs", Seq((1L, None, "the cat sat")))
+    val empty = corpus("empty_docs", Nil)
+    Seq(unlabeled, empty).foreach { d =>
+      val m = TextPipeline.langId(spark, d)
+      assert(m.schema === normal)
+      assert(m.isEmpty)
+    }
+  }
+
   test("fingerprints are stable across invocations") {
     val a = TextPipeline.fingerprint(spark, dir).collect().toSeq
     val b = TextPipeline.fingerprint(spark, dir).collect().toSeq
